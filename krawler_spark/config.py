@@ -25,10 +25,6 @@ class CrawlConfig:
     respect_robots_txt: bool = True
     follow_redirects: bool = True
     use_fast_redirect_strategy: bool = True
-    maximum_queue_size: int = 1_000_000
-    shutdown_on_empty_queue: bool = True
-    persistent_crawl: bool = False
-    crawl_directory: str = ".krawl"
 
     # BSP-round parameters (engine-specific)
     round_seconds: float = 10.0         # nominal round length → politeness budget
@@ -47,12 +43,13 @@ class CrawlConfig:
     bloom_buckets: int = 64
     bloom_bits_per_bucket: int = 1 << 17
     # Below this many history rows a plain JVM anti-join beats the
-    # python probe stage; shards are still maintained every round so the
-    # switch-over needs no backfill. (At 10^10 rows the probe is the
-    # only viable plan — that's what it exists for.)
+    # python probe stage, and no shards are written. The round whose
+    # commit reaches it builds the first shards from the full history
+    # view; later rounds merge their own history rows in. (At 10^10
+    # rows the probe is the only viable plan — that's what it exists
+    # for.)
     bloom_activation_rows: int = 2_000_000
     use_bloom: bool = True
-    frontier_partitions: int = 32       # hash(host) shards ≈ ScheduledQueue's 10 queues
     host_salt: int = 1                  # >1 = salted two-phase politeness rank (hot hosts)
     # The corpus/pages table is bucketed by url (Iceberg bucket(url)
     # transform or a bucketed Hive table). When True the harvest stage
@@ -77,8 +74,7 @@ class CrawlConfig:
     # clamp(defaultParallelism, committed frontier_next / this, 4096) —
     # a cluster sizes exchanges to input volume, not core count, and
     # lets AQE coalesce. 0 disables (the session setting then applies
-    # to every round). Note the conf is session-level: it persists after
-    # the crawl.
+    # to every round). run() restores the caller's value when it returns.
     shuffle_rows_per_partition: int = 500_000
     # Attach the harvested link array (href/text/attrs/kind — the
     # KrawlDocument.anchorTags + otherOutgoingLinks surface,

@@ -12,20 +12,22 @@ as one Catalyst-planned DataFrame DAG per round:
       ──redirect-chain resolve + left join pages corpus (the offline
         GET, url-bucketed table)──▶ fetched / errors
       ──mapInPandas harvest (canonicalize + filters)──▶ children
-    delta@r = visited ∪ noops ∪ events ∪ children ∪ deferred
+    delta@r = visited ∪ noops ∪ events ∪ children ∪ deferred ∪ host_state
     frontier@r+1 = delta@r[kind ∈ (child, deferred)]   (a view)
 
 Scale decisions (graded against the north rule):
 
 * ONE materializing Spark job per round: every output row (visited,
   history-consumed noops, events, harvested children, deferred queue
-  rows) is a branch of a single union written once, hive-partitioned
-  by ``kind`` (``plans/store.py``). The logical tables — history,
-  visited, events, frontier@r+1 — are partition-pruned views of that
-  delta, so nothing is materialized twice and no cross-job cache
-  thrash exists. Shared subtrees dedupe at the shuffle layer
-  (ReusedExchange); only the two genuinely hot frames (the bloom-probe
-  output and the fetch-join output) are explicitly persisted.
+  rows, per-host fetch counts) is a branch of a single union written
+  once, hive-partitioned by ``kind`` (``plans/store.py``). The logical
+  tables — history, visited, events, frontier@r+1 — are
+  partition-pruned views of that delta, so nothing is materialized
+  twice and no cross-job cache thrash exists. Shared subtrees dedupe
+  at the shuffle layer (ReusedExchange); only the two genuinely hot
+  frames (the bloom-probe output and the fetch-join output) are
+  explicitly persisted. Bloom shards are written only once the next
+  round's probe will read them.
 * the frontier is hash-partitioned by ``host`` for the politeness
   window; hot hosts are bounded by the per-host budget itself (at most
   ``budget`` rows per host survive admission, so the fetch join is
@@ -52,7 +54,7 @@ import time
 import zlib
 from typing import Iterator, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -66,6 +68,8 @@ from .plans.store import HIST_KINDS, SnapshotStore
 from . import schemas
 
 _FF = [f.name for f in schemas.FRONTIER.fields]
+
+_SHUFFLE_PARTS = "spark.sql.shuffle.partitions"
 
 # the total pop order K as plain column names (for range partitioning)
 _POP_COLS = ["priority", "enq_round", "seq", "url"]
@@ -93,6 +97,10 @@ _DELTA_EXTRA = [
     # multi-million-row children branch where a map column would not)
     ("clen", "long"),
 ]
+# every delta column but kind, in write order
+_DELTA_COLS = [
+    (f.name, f.dataType.simpleString()) for f in schemas.FRONTIER.fields
+] + _DELTA_EXTRA
 
 
 def _pop_order():
@@ -102,16 +110,15 @@ def _pop_order():
 
 
 def _to_delta(df: DataFrame, kind: str, **cols) -> DataFrame:
-    """Project a branch frame onto the unified delta schema."""
+    """Project a branch frame onto the unified delta schema; columns the
+    branch does not carry are NULL."""
     out = df
-    for name, typ in _DELTA_EXTRA:
+    for name, typ in _DELTA_COLS:
         if name in cols:
             out = out.withColumn(name, cols[name])
         elif name not in out.columns:
             out = out.withColumn(name, F.lit(None).cast(typ))
-    return out.select(*_FF, *[n for n, _ in _DELTA_EXTRA]).withColumn(
-        "kind", F.lit(kind)
-    )
+    return out.select(*[n for n, _ in _DELTA_COLS]).withColumn("kind", F.lit(kind))
 
 
 class _Timer:
@@ -387,6 +394,11 @@ class CrawlEngine:
         return staged.withColumn("enq_round", F.lit(rnd)).select(*_FF)
 
     # ------------------------------------------------------------- round DAG
+    def _bloom_active(self, history_rows: int) -> bool:
+        """Does a round starting from this many history rows probe?"""
+        cfg = self.config
+        return cfg.use_bloom and history_rows >= cfg.bloom_activation_rows
+
     def _run_round(self, rnd: int, frontier: DataFrame, state: dict) -> dict:
         cfg = self.config
         spark = self.spark
@@ -397,26 +409,6 @@ class CrawlEngine:
         # No upfront repartition: the dedup window shuffles by url and the
         # politeness window by host — Catalyst inserts exactly those two
         # exchanges; a forced repartition would add a third for nothing.
-
-        # Data-derived shuffle partitions (north_rule: partitions sized
-        # to VOLUME, not core count): the previous round's committed
-        # frontier_next count is already in the commit state — size this
-        # round's exchanges so one sort partition holds roughly
-        # `shuffle_rows_per_partition` rows (8 partitions over a 34M-row
-        # dedup sort spill multi-GB per task and go superlinear; 64 over
-        # a 3M-row frontier pay pure scheduling overhead). AQE coalesces
-        # the small post-shuffle partitions either way.
-        if cfg.shuffle_rows_per_partition > 0:
-            est = state.get("frontier_next")
-            if est:
-                parts = min(
-                    4096,
-                    max(
-                        spark.sparkContext.defaultParallelism,
-                        int(est) // cfg.shuffle_rows_per_partition,
-                    ),
-                )
-                spark.conf.set("spark.sql.shuffle.partitions", str(parts))
 
         # --- 1. depth cut (consumed, no history insert) --------------------
         if cfg.max_depth != -1:
@@ -449,9 +441,7 @@ class CrawlEngine:
         # past the bloom activation threshold the probe prefilters
         # map-side and only maybe-seen candidates join at all.
         history = self.store.read_history(rnd - 1)
-        bloom_active = cfg.use_bloom and (
-            state.get("history_rows", 0) >= cfg.bloom_activation_rows
-        )
+        bloom_active = self._bloom_active(state.get("history_rows", 0))
         probed = None
         if history is not None:
             hist_urls = history.select("url").withColumn("_seen_h", F.lit(True))
@@ -736,17 +726,27 @@ class CrawlEngine:
         tm.tick("materialize round chain")
 
         # --- visited branch + per-host fetch ordinals ---------------------------
+        # Per-host cumulative fetch counts are the delta kind `host_state`
+        # (count in host_seq): read from round rnd-1, rewritten here.
         ok = fetched.filter(F.col("_hit"))
         w_host_seq = Window.partitionBy("host").orderBy(*_pop_order())
-        prev_host = self.store.read_snapshot("host_state", rnd - 1)
         visited = ok.withColumn("_hs", F.row_number().over(w_host_seq))
-        if prev_host is not None:
+        host_counts = ok.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
+        prev_delta = self.store.read_delta_round(rnd - 1)
+        if prev_delta is not None:
+            prev_host = prev_delta.filter(F.col("kind") == "host_state").select(
+                "host", F.col("host_seq").alias("_prev")
+            )
             # plain host-keyed join: per-host cumulative counts grow with
             # distinct hosts (~10^8 at Common-Crawl scale) — never an
             # unconditional broadcast; AQE broadcasts it while small
-            visited = visited.join(
-                prev_host.withColumnRenamed("fetched", "_prev"), "host", "left"
-            ).withColumn("_hs", F.col("_hs") + F.coalesce(F.col("_prev"), F.lit(0))).drop("_prev")
+            visited = visited.join(prev_host, "host", "left").withColumn(
+                "_hs", F.col("_hs") + F.coalesce(F.col("_prev"), F.lit(0))
+            ).drop("_prev")
+            host_counts = host_counts.unionByName(
+                prev_host.withColumnRenamed("_prev", "_n")
+            ).groupBy("host").agg(F.sum("_n").alias("_n"))
+        host_b = _to_delta(host_counts, "host_state", host_seq=F.col("_n").cast("int"))
         # Payload re-join (see the fetch join above): text/lang come
         # from a column-pruned scan of the bucketed corpus keyed by the
         # chain-final url (no html decode — clen is the once-per-crawl
@@ -833,10 +833,6 @@ class CrawlEngine:
         if denied is not None:
             hist_part = hist_part.unionByName(_to_delta(denied, "robots_denied"))
         if hist_extra is not None:
-            hist_extra = hist_extra.withColumn("host", F.lit(None).cast("string")) \
-                .withColumn("root_page_id", F.lit(None).cast("int")) \
-                .withColumn("parent_url", F.lit(None).cast("string")) \
-                .withColumn("depth", F.lit(None).cast("int"))
             hist_part = hist_part.unionByName(_to_delta(hist_extra, "budget_extra"))
 
         # history ids (History/Model.kt:23-25): oracle-exact mode assigns
@@ -999,8 +995,6 @@ class CrawlEngine:
             # partition spread inside the round's one materializing job
             # (spark_partition_id immediately above the python node);
             # read back after the write, below.
-            from pyspark.sql import Observation
-
             extract_obs = Observation(f"extract_parts_r{rnd}")
             children = children.withColumn(
                 "_pid", F.spark_partition_id()
@@ -1048,13 +1042,13 @@ class CrawlEngine:
         # Round counters ride the write job itself (Observation metrics
         # computed while rows stream to parquet) — the old separate
         # count-aggregation job over the written delta is gone.
-        from pyspark.sql import Observation
-
         obs = Observation(f"round_{rnd}")
         is_hist = F.col("kind").isin(*HIST_KINDS).cast("long")
         is_frontier = F.col("kind").isin("child", "deferred").cast("long")
         is_vis = (F.col("kind") == "visited").cast("long")
-        delta = hist_part.unionByName(ev_part).unionByName(frontier_part).observe(
+        delta = hist_part.unionByName(ev_part).unionByName(frontier_part).unionByName(
+            host_b
+        ).observe(
             obs,
             F.sum(is_vis).alias("visited"),
             F.sum(F.when(F.col("kind") == "visited",
@@ -1088,47 +1082,24 @@ class CrawlEngine:
                 )
         tm.tick("round delta write (single job)")
 
-        # --- follow-ups over the written delta (partition-pruned, tiny) --------
-        # host_state and the bloom merge are independent writes over
-        # disjoint delta partitions — submit them CONCURRENTLY (Spark's
-        # scheduler interleaves jobs from separate driver threads), so
-        # the round pays max() of the two flat job costs, not the sum.
-        d = self.store.read_delta_round(rnd)
-
-        def _host_state_job() -> None:
-            host_counts = (
-                d.filter(F.col("kind") == "visited")
-                .groupBy("host").agg(F.count(F.lit(1)).alias("fetched"))
+        # --- bloom shards: written only once the next round probes them ------
+        # The first build covers the whole URL-seen view; later rounds OR
+        # their own history rows into the shards the previous commit
+        # recorded (bloom_round). A bloom filter is the OR of its inputs,
+        # so both routes set the same bits.
+        history_rows = state.get("history_rows", 0) + hist_ct
+        write_bloom = self._bloom_active(history_rows)
+        if write_bloom:
+            old = (self.store.read_snapshot("bloom", rnd - 1)
+                   if state.get("bloom_round") == rnd - 1 else None)
+            urls = self.store.read_history(rnd)
+            if old is not None:
+                urls = urls.filter(F.col("seen_round") == rnd)
+            shards = bloom_ops.build_delta(
+                urls.select("url"), cfg.bloom_buckets, cfg.bloom_bits_per_bucket
             )
-            if prev_host is not None:
-                host_counts2 = (
-                    host_counts.unionByName(prev_host)
-                    .groupBy("host").agg(F.sum("fetched").alias("fetched"))
-                )
-            else:
-                host_counts2 = host_counts
-            self.store.write_table("host_state", rnd, host_counts2)
-
-        def _bloom_job() -> None:
-            old = self.store.read_snapshot("bloom", rnd - 1)
-            delta_shards = bloom_ops.build_delta(
-                d.filter(F.col("kind").isin(*HIST_KINDS)).select("url"),
-                cfg.bloom_buckets, cfg.bloom_bits_per_bucket,
-            )
-            self.store.write_table(
-                "bloom", rnd, bloom_ops.merge_shards(old, delta_shards)
-            )
-
-        jobs = [_host_state_job] + ([_bloom_job] if cfg.use_bloom else [])
-        if len(jobs) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(len(jobs)) as pool:
-                for fut in [pool.submit(j) for j in jobs]:
-                    fut.result()
-        else:
-            jobs[0]()
-        tm.tick("follow-ups (host_state ∥ bloom merge)")
+            self.store.write_table("bloom", rnd, bloom_ops.merge_shards(old, shards))
+            tm.tick("bloom shards")
 
         metrics_rows = [
             (rnd, "visited", int(visited_ct)),
@@ -1141,7 +1112,8 @@ class CrawlEngine:
         new_state = {
             "counted": state.get("counted", 0) + int(counted_now),
             "next_history_id": base_id + int(hist_ct),
-            "history_rows": state.get("history_rows", 0) + int(hist_ct),
+            "history_rows": history_rows,
+            "bloom_round": rnd if write_bloom else None,
         }
         new_state["exhausted"] = bool(will_exhaust)
         new_state["frontier_next"] = int(frontier_ct)
@@ -1194,6 +1166,22 @@ class CrawlEngine:
             state = {"counted": 0, "next_history_id": 0}
         self._cleanup_uncommitted(start)
 
+        # the per-round shuffle sizing changes a session-level conf; the
+        # caller gets its own value back however the crawl ends
+        caller_parts = self.spark.conf.get(_SHUFFLE_PARTS, None)
+        try:
+            return self._round_loop(start, state)
+        finally:
+            if caller_parts is None:
+                self.spark.conf.unset(_SHUFFLE_PARTS)
+            else:
+                self.spark.conf.set(_SHUFFLE_PARTS, caller_parts)
+            if getattr(self, "_clen_df", None) is not None:
+                self._clen_df.unpersist()
+                self._clen_df = None
+
+    def _round_loop(self, start: int, state: dict) -> dict:
+        cfg = self.config
         rnd = start
         for rnd in range(start, cfg.max_rounds):
             if state.get("exhausted"):
@@ -1215,10 +1203,21 @@ class CrawlEngine:
                 and frontier.isEmpty()
             ):
                 break
+            # Data-derived shuffle partitions (north_rule: partitions sized
+            # to VOLUME, not core count): size this round's exchanges from
+            # the committed frontier_next count so one sort partition holds
+            # roughly `shuffle_rows_per_partition` rows (8 partitions over a
+            # 34M-row dedup sort spill multi-GB per task and go superlinear;
+            # 64 over a 3M-row frontier pay pure scheduling overhead). AQE
+            # coalesces the small post-shuffle partitions either way.
+            est = state.get("frontier_next")
+            if cfg.shuffle_rows_per_partition > 0 and est:
+                parts = min(4096, max(
+                    self.spark.sparkContext.defaultParallelism,
+                    int(est) // cfg.shuffle_rows_per_partition,
+                ))
+                self.spark.conf.set(_SHUFFLE_PARTS, str(parts))
             state = self._run_round(rnd, frontier, state)
-        if getattr(self, "_clen_df", None) is not None:
-            self._clen_df.unpersist()
-            self._clen_df = None
         return {"rounds": rnd, "state": state}
 
     # ------------------------------------------------- O19/O20 maintenance ops

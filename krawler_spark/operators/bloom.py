@@ -23,10 +23,11 @@ the common case ("never seen this URL") a shard-local test:
   correctness never depends on bloom tuning); probe positive ⇒ maybe
   seen → only that subset flows into the exact anti-join.
 
-Shards are persisted with each round snapshot (``plans/store.py``) so a
-resumed job reloads them instead of rescanning history — the
-"per-partition bloom shards carried by Iceberg snapshot checkpoints"
-of the north rule.
+Shards are persisted with each round snapshot (``plans/store.py``)
+once the probe is active (``bloom_activation_rows``; the first set is
+built from the full history view), so a resumed job reloads them
+instead of rescanning history — the "per-partition bloom shards
+carried by Iceberg snapshot checkpoints" of the north rule.
 """
 
 from __future__ import annotations
@@ -96,7 +97,9 @@ def merge_shards(old: Optional[DataFrame], delta: DataFrame) -> DataFrame:
     """OR old and delta shard sets, fully distributed: one
     groupBy(bucket) shuffle of (bucket, bits) rows, numpy OR-fold per
     bucket. Nothing transits the driver — at 10^10 URLs the shard set
-    is ~20 GB and this plan shape is unchanged."""
+    is ~20 GB and this plan shape is unchanged. No old set ⇒ delta."""
+    if old is None:
+        return delta
 
     def _or(pdf):
         import pandas as pd
@@ -109,8 +112,7 @@ def merge_shards(old: Optional[DataFrame], delta: DataFrame) -> DataFrame:
             {"bucket": [int(pdf["bucket"].iloc[0])], "bits": [acc.tobytes()]}
         )
 
-    both = delta if old is None else old.unionByName(delta)
-    return both.groupBy("bucket").applyInPandas(_or, schema=BLOOM)
+    return old.unionByName(delta).groupBy("bucket").applyInPandas(_or, schema=BLOOM)
 
 
 def probe(

@@ -17,10 +17,11 @@ Mapping from the parquet-dir layout to Iceberg:
 parquet-dir store   Iceberg store
 ==================  =====================================================
 delta/r=N/kind=K    table ``<ns>.delta`` PARTITIONED BY (r, kind);
-                    one ``append`` per round (atomic Iceberg snapshot)
+                    one ``append`` per round (atomic Iceberg snapshot);
+                    per-host fetch counts are its ``host_state`` kind
 frontier/r=N        table ``<ns>.frontier_snap`` partitioned by r
-bloom/r=N           table ``<ns>.bloom`` partitioned by r
-host_state/r=N      table ``<ns>.host_state`` partitioned by r
+bloom/r=N           table ``<ns>.bloom`` partitioned by r, written once
+                    history reaches ``bloom_activation_rows``
 metrics/r=N         table ``<ns>.metrics`` partitioned by r
 _commits/rN.json    table ``<ns>.commits`` (r, state_json) — the commit
                     row append IS the transaction boundary; a crashed
@@ -310,10 +311,12 @@ class IcebergSnapshotStore:
 
     # -- maintenance ----------------------------------------------------------
     def prune_snapshots(self, keep_from_round: int) -> None:
-        for name in ("frontier_snap", "bloom", "host_state"):
+        for name, extra in (("frontier_snap", ""), ("bloom", ""),
+                            ("delta", " AND kind = 'host_state'")):
             if self._exists(name):
                 self.spark.sql(
-                    f"DELETE FROM {self._tbl(name)} WHERE r < {int(keep_from_round)}"
+                    f"DELETE FROM {self._tbl(name)} "
+                    f"WHERE r < {int(keep_from_round)}{extra}"
                 )
 
     def destroy(self) -> None:

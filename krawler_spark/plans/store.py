@@ -17,11 +17,14 @@ Layout::
                                 visited  = kind = 'visited'
                                 events   = kind ∈ EVENT_KINDS
                                 frontier@N+1 = kind ∈ ('child','deferred')
+                              plus kind = 'host_state': per-host
+                              cumulative fetch counts (host, host_seq),
+                              read by round N+1 and by no view
       frontier/r=<N>/         explicit frontier snapshots (seeds at r=0,
                               maintenance-op rewrites); take precedence
                               over the delta-derived view
-      bloom/r=<N>/            per-bucket bloom shards snapshot
-      host_state/r=<N>/       per-host cumulative fetch ordinals
+      bloom/r=<N>/            per-bucket bloom shards snapshot, written
+                              once history reaches bloom_activation_rows
       metrics/r=<N>/          tiny per-round lineage counters
       _commits/r<N>.json      commit marker — written LAST, atomically
       _history_floor.json     clearHistory watermark (rounds below are
@@ -69,7 +72,7 @@ class SnapshotStore:
         # logical-table name → inferred StructType, filled on first read.
         # Every uncached spark.read.parquet runs a driver-side footer/
         # schema-inference job; the round loop re-reads the same logical
-        # tables every round (delta view, host_state, bloom, metrics) —
+        # tables every round (delta view, bloom, metrics) —
         # measured ~10 tiny jobs plus their driver gaps per crawl before
         # caching. Keyed by table NAME, not path, so each new round's
         # directory reuses the schema; per-instance, so a resumed store
@@ -126,11 +129,16 @@ class SnapshotStore:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         d = self._table_dir(name, round_no)
         os.makedirs(d, exist_ok=True)
         cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
+        # the declared types, not pyarrow's inference (an int column
+        # would otherwise come back as bigint)
         table = pa.table(
-            {f.name: list(c) for f, c in zip(schema.fields, cols)}
+            {f.name: list(c) for f, c in zip(schema.fields, cols)},
+            schema=to_arrow_schema(schema),
         )
         pq.write_table(table, os.path.join(d, "part-0.parquet"))
 
@@ -328,15 +336,20 @@ class SnapshotStore:
 
     # -- maintenance ----------------------------------------------------------
     def prune_snapshots(self, keep_from_round: int) -> None:
-        """Drop old snapshot rounds (bloom/host_state/frontier); the
-        unified delta is kept — it is the history/lineage."""
-        for name in ("frontier", "bloom", "host_state"):
+        """Drop old snapshot rounds (bloom/frontier) and old rounds'
+        ``kind=host_state`` delta partitions; the rest of the unified
+        delta is kept — it is the history/lineage."""
+        for name in ("frontier", "bloom"):
             base = os.path.join(self.path, name)
             if not os.path.isdir(base):
                 continue
             for fn in os.listdir(base):
                 if fn.startswith("r=") and int(fn.split("=")[1]) < keep_from_round:
                     shutil.rmtree(os.path.join(base, fn), ignore_errors=True)
+        for r in self.delta_rounds():
+            if r < keep_from_round:
+                shutil.rmtree(os.path.join(self._table_dir("delta", r), "kind=host_state"),
+                              ignore_errors=True)
 
     def destroy(self) -> None:
         shutil.rmtree(self.path, ignore_errors=True)

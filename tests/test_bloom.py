@@ -2,6 +2,10 @@
 (VERDICT r1 item 3 — shard bytes must never transit the driver)."""
 
 import inspect
+import itertools
+import os
+
+import pytest
 
 from krawler_spark.config import CrawlConfig
 from krawler_spark.engine import CrawlEngine
@@ -22,9 +26,12 @@ def test_bloom_module_has_no_driver_collect():
     assert "sparkContext.broadcast" not in src
 
 
-def test_bloom_many_buckets_crawl_matches_exact(spark, tmp_path):
-    """512-bucket shards, probe forced on from round 0: same visited set
-    as the exact-only path."""
+@pytest.mark.parametrize("activation", [0, 4])
+def test_bloom_many_buckets_crawl_matches_exact(spark, tmp_path, activation):
+    """512-bucket shards: same (url, depth, host_seq) as the exact-only
+    path. activation=0 probes from round 0; activation=4 falls between
+    the round-0 and round-1 cumulative history, so the first shards are
+    built from the full history mid-crawl and later rounds probe them."""
     rows = build_pages_local(n_hosts=3, pages_per_host=10, hot_factor=3)
 
     def run(cfg, wh):
@@ -33,19 +40,34 @@ def test_bloom_many_buckets_crawl_matches_exact(spark, tmp_path):
             store=SnapshotStore(spark, str(wh)),
         )
         eng.run(default_seeds(3))
-        return sorted(
+        visited = sorted(
             (r["url"], r["depth"], r["host_seq"]) for r in eng.visited().collect()
         )
+        return eng, visited
 
-    v_bloom = run(
+    eng, v_bloom = run(
         CrawlConfig(deterministic_history_ids=True, max_depth=3,
                     round_seconds=1.0, use_bloom=True, bloom_buckets=512,
-                    bloom_bits_per_bucket=1 << 12, bloom_activation_rows=0),
+                    bloom_bits_per_bucket=1 << 12,
+                    bloom_activation_rows=activation),
         tmp_path / "b512",
     )
-    v_exact = run(
+    _, v_exact = run(
         CrawlConfig(deterministic_history_ids=True, max_depth=3,
                     round_seconds=1.0, use_bloom=False),
         tmp_path / "exact",
     )
     assert v_bloom == v_exact and len(v_bloom) > 0
+
+    # shards exist at round k iff the history committed at k reaches
+    # the activation threshold (round k+1 probes them)
+    store = eng.store
+    last = store.last_committed()
+    inserted = {r["round"]: r["value"]
+                for r in store.read_metrics(last).collect()
+                if r["metric"] == "history_inserted"}
+    cumulative = list(itertools.accumulate(inserted[k] for k in range(last + 1)))
+    if activation:
+        assert cumulative[0] < activation <= cumulative[1] and last >= 2
+    for k, hist in enumerate(cumulative):
+        assert os.path.isdir(store._table_dir("bloom", k)) == (hist >= activation), k

@@ -247,6 +247,15 @@ def test_emulated_store_crawl_equivalence(spark, emu_store):
     assert isinstance(store.committed_state(last), dict)
 
 
+def test_emulated_metrics_schema_matches_declared(spark, emu_store):
+    from krawler_spark import schemas
+
+    store, _emu = emu_store
+    store.write_rows_local("metrics", 0, [(0, "visited", 3)], schemas.METRICS)
+    got = [(f.name, f.dataType) for f in store.read_metrics(0).schema.fields]
+    assert got == [(f.name, f.dataType) for f in schemas.METRICS.fields]
+
+
 def test_emulated_round_retry_is_idempotent(spark, emu_store):
     """A round retry replaces exactly that round's delta rows — the
     crashed-round recovery the docstring promises. Must hold even when
@@ -316,11 +325,19 @@ def test_emulated_history_floor_and_prune(spark, emu_store):
     store.set_history_floor(2)
     assert store.history_floor() == 2
     for rnd in (0, 1, 2):
-        store.write_table("host_state", rnd, spark.createDataFrame(
-            [("h", rnd)], "host string, seq int"))
+        store.write_table("bloom", rnd, spark.createDataFrame(
+            [(rnd, b"\x01")], "bucket int, bits binary"))
+        store.write_delta(rnd, spark.createDataFrame(
+            [("u%d" % rnd, None, "visited"), (None, rnd, "host_state")],
+            "url string, host_seq int, kind string"))
     store.prune_snapshots(keep_from_round=2)
-    left = {r["r"] for r in emu.df(store._tbl("host_state")).collect()}
+    left = {r["r"] for r in emu.df(store._tbl("bloom")).collect()}
     assert left == {2}
+    # old rounds lose only their host_state kind; the rest of the delta
+    # is the history and stays
+    delta = {(r["r"], r["kind"]) for r in emu.df(store._tbl("delta")).collect()}
+    assert delta == {(0, "visited"), (1, "visited"), (2, "visited"),
+                     (2, "host_state")}
     # destroy drops the namespace and every table under it
     store.destroy()
     assert not any(t.startswith(store.ns + ".") for t in emu.tables)
