@@ -57,7 +57,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .store import EVENT_KINDS, FRONTIER_KINDS, HIST_KINDS
+from .store import EVENT_KINDS, FRONTIER_KINDS, HIST_KINDS, visited_headers
 
 
 def iceberg_available(spark: SparkSession, catalog: str) -> bool:
@@ -263,6 +263,7 @@ class IcebergSnapshotStore:
             F.col("r").cast("int").alias("fetch_round"),
             "host_seq", "action", "status", "text", "lang", "redirect_history",
             links,
+            visited_headers(),
         )
 
     def read_events(self, upto_round: int) -> Optional[DataFrame]:

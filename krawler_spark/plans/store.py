@@ -65,6 +65,21 @@ EVENT_KINDS = ("repeat_visit", "depth_cut", "robots_denied", "fetch_error",
 FRONTIER_KINDS = ("child", "deferred")
 
 
+def visited_headers():
+    """The visited view's ``headers``: KrawlDocument's lower-cased
+    response headers (KrawlDocument.kt:51-61), synthesized from the
+    stored content length — the offline-fetch pair a static server
+    would send. A live connector would store its real (lower-cased)
+    response map in the delta instead."""
+    return F.when(
+        F.col("clen").isNotNull(),
+        F.create_map(
+            F.lit("content-type"), F.lit("text/html; charset=utf-8"),
+            F.lit("content-length"), F.col("clen").cast("string"),
+        ),
+    ).alias("headers")
+
+
 class SnapshotStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -272,18 +287,7 @@ class SnapshotStore:
             F.col("r").cast("int").alias("fetch_round"),
             "host_seq", "action", "status", "text", "lang", "redirect_history",
             links,
-            # KrawlDocument's lower-cased response headers
-            # (KrawlDocument.kt:51-61): synthesized here from the stored
-            # content length — the offline-fetch pair a static server
-            # would send. A live connector would store its real
-            # (lower-cased) response map in the delta instead.
-            F.when(
-                F.col("clen").isNotNull(),
-                F.create_map(
-                    F.lit("content-type"), F.lit("text/html; charset=utf-8"),
-                    F.lit("content-length"), F.col("clen").cast("string"),
-                ),
-            ).alias("headers"),
+            visited_headers(),
         )
 
     def read_events(self, upto_round: int) -> Optional[DataFrame]:

@@ -1,5 +1,5 @@
 """Profile just the crawl round loop (no headline queries) at one core
-count, with KS_TIMING stage ticks. Usage:
+count, with the engine's DEBUG stage ticks. Usage:
 
     python scripts/profile_crawl.py --cpus 8 --hosts 64 --pages 1200
 """
@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import os
 import sys
 import time
@@ -22,7 +23,8 @@ def main() -> None:
     ap.add_argument("--pages", type=int, default=1200)
     args = ap.parse_args()
 
-    os.environ["KS_TIMING"] = "1"
+    logging.basicConfig(format="%(message)s")
+    logging.getLogger("krawler_spark.engine").setLevel(logging.DEBUG)
     os.environ.setdefault("SPARK_LOCAL_DIRS", "/dev/shm/sparktmp")
 
     from krawler_spark.session import get_spark

@@ -4,6 +4,9 @@ estimated fetched bytes cannot yield >= 2x-parallelism extraction
 splits, so the engine must fall back to the de-skew respread — and the
 crawl's outputs must be identical either way."""
 
+import glob
+import logging
+import os
 import tempfile
 
 from pyspark.sql import functions as F
@@ -44,7 +47,7 @@ def test_guard_falls_back_to_respread_at_small_volume(spark):
     assert counts_b == counts_r and counts_b[0] > 0
 
 
-def test_guard_skips_only_at_volume(spark, monkeypatch):
+def test_guard_skips_only_at_volume(spark, monkeypatch, caplog):
     """Force the volume estimate over the threshold: the skip runs, the
     executed extraction partition count is observed, and a collapsed
     spread flips the engine to the respread for later rounds."""
@@ -62,6 +65,7 @@ def test_guard_skips_only_at_volume(spark, monkeypatch):
                       warehouse=tempfile.mkdtemp(prefix="ks_guard_"))
     # pretend every page is 10 GB so the volume guard passes
     monkeypatch.setattr(eng, "_avg_html_bytes", lambda: 10 * 1024 ** 3)
+    caplog.set_level(logging.WARNING, logger="krawler_spark.engine")
     eng.run(seeds_df=seeds)
     # round 0 ran the skip and observed its executed extraction spread
     r0 = eng.harvest_shape_log[0]
@@ -73,3 +77,26 @@ def test_guard_skips_only_at_volume(spark, monkeypatch):
     if r0["extract_parts"] < spark.sparkContext.defaultParallelism:
         assert eng._force_respread is True
         assert all(e["respread"] for e in eng.harvest_shape_log[1:])
+        warned = [r for r in caplog.records
+                  if r.name == "krawler_spark.engine"
+                  and r.levelno == logging.WARNING
+                  and "harvest skip collapsed" in r.getMessage()]
+        assert len(warned) == 1 and "in round 0" in warned[0].getMessage()
+
+
+def test_respread_runs_in_one_wave(spark):
+    """The default respread makes one harvest task per core: each round's
+    child delta holds at most defaultParallelism files (one per harvest
+    task that emitted children)."""
+    eng, counts = _run(spark, bucketed=False)
+    par = spark.sparkContext.defaultParallelism
+    rounds = [e["round"] for e in eng.harvest_shape_log if e["respread"]]
+    files = {
+        r: glob.glob(os.path.join(eng.store.path, "delta", f"r={r}",
+                                  "kind=child", "*.parquet"))
+        for r in rounds
+    }
+    # at least two rounds fetched pages and harvested children
+    assert len([r for r in rounds if files[r]]) >= 2 and counts[0] > 0
+    assert all(len(f) <= par for f in files.values()), {
+        r: len(f) for r, f in files.items()}

@@ -341,3 +341,39 @@ def test_emulated_history_floor_and_prune(spark, emu_store):
     # destroy drops the namespace and every table under it
     store.destroy()
     assert not any(t.startswith(store.ns + ".") for t in emu.tables)
+
+
+def test_emulated_views_match_parquet_store(spark, emu_store, tmp_path):
+    """Both store backends expose the same view columns over one crawl,
+    each declared field with its declared type (``links`` is the one
+    extra column, on both)."""
+    from krawler_spark import schemas
+    from krawler_spark.plans.store import SnapshotStore
+
+    store, _emu = emu_store
+    rows = build_pages_local(n_hosts=3, pages_per_host=6, hot_factor=2)
+    cfg = CrawlConfig(max_depth=2, round_seconds=1.0, max_rounds=2,
+                      use_bloom=False)
+    views = {}
+    for name, st in (("iceberg", store),
+                     ("parquet", SnapshotStore(spark, str(tmp_path / "wh")))):
+        eng = CrawlEngine(spark, spark.createDataFrame(rows, PAGES),
+                          config=cfg, store=st)
+        eng.run(default_seeds(3))
+        last = st.last_committed()
+        views[name] = {
+            "visited": st.read_visited(last).schema,
+            "history": st.read_history(last).schema,
+            "events": st.read_events(last).schema,
+        }
+    declared = {"visited": schemas.VISITED, "history": schemas.HISTORY,
+                "events": schemas.SIDE_EVENTS}
+    for view, want in declared.items():
+        ice, pq = views["iceberg"][view], views["parquet"][view]
+        assert ice.fieldNames() == pq.fieldNames(), view
+        for sch in (ice, pq):
+            types = {f.name: f.dataType for f in sch.fields}
+            for f in want.fields:
+                assert f.name in types, (view, f.name)
+                assert types[f.name] == f.dataType, (view, f.name)
+            assert set(types) - set(want.fieldNames()) <= {"links"}, view
