@@ -64,7 +64,7 @@ from .functions.kanon import parse_url
 from .operators import bloom as bloom_ops
 from .operators.ordered import ordered_cumsum
 from .oracle import child_seq
-from .plans.store import HIST_KINDS, SnapshotStore
+from .plans.store import HIST_KINDS, SnapshotStore, StoreCore
 from . import schemas
 
 log = logging.getLogger(__name__)
@@ -148,7 +148,7 @@ class CrawlEngine:
         spark: SparkSession,
         pages: Optional[DataFrame] = None,
         config: Optional[CrawlConfig] = None,
-        store: Optional[SnapshotStore] = None,
+        store: Optional[StoreCore] = None,
         warehouse: Optional[str] = None,
         should_visit: str = "true",
         should_check: str = "false",
@@ -378,13 +378,7 @@ class CrawlEngine:
                  zlib.crc32(pu.canonical.encode()) % (1 << 31), None,
                  0, priority, 0, zlib.crc32(pu.canonical.encode()))
             )
-        df = self.spark.createDataFrame(rows, schemas.FRONTIER)
-        if not hasattr(self.store, "stage_submissions"):
-            raise NotImplementedError(
-                f"{type(self.store).__name__} does not support live "
-                "submissions (stage_submissions/drain_submissions)"
-            )
-        self.store.stage_submissions(df)
+        self.store.stage_submissions(self.spark.createDataFrame(rows, schemas.FRONTIER))
 
     def _drain_submissions(self, rnd: int) -> Optional[DataFrame]:
         """Consume staged submissions via the store (each store keeps
@@ -392,8 +386,6 @@ class CrawlEngine:
         parquet-dir store, a consumed-round column for Iceberg) and
         return them as a frontier-shaped frame. Idempotent across a
         crash/resume of the same round."""
-        if not hasattr(self.store, "drain_submissions"):
-            return None
         staged = self.store.drain_submissions(rnd)
         if staged is None:
             return None
@@ -452,7 +444,7 @@ class CrawlEngine:
         if history is not None:
             hist_urls = history.select("url").withColumn("_seen_h", F.lit(True))
             if bloom_active:
-                shard_dir = self.store._table_dir("bloom", rnd - 1)
+                shard_dir = self.store.bloom_dir(rnd - 1)
                 # persist the probe output (a python stage) — its two
                 # consumers must not replay the pandas probe
                 probed = bloom_ops.probe(
@@ -1144,15 +1136,6 @@ class CrawlEngine:
         return new_state
 
     # ------------------------------------------------------------------ driver
-    def _cleanup_uncommitted(self, from_round: int) -> None:
-        """Drop orphan delta dirs from a crashed attempt so partition
-        discovery never trips over half-written files."""
-        import shutil as _sh
-
-        for r in self.store.delta_rounds():
-            if r >= from_round:
-                _sh.rmtree(self.store._table_dir("delta", r), ignore_errors=True)
-
     def run(
         self,
         seeds: Optional[List[str]] = None,
@@ -1176,7 +1159,7 @@ class CrawlEngine:
             self.store.write_table("frontier", 0, seeded)
             start = 0
             state = {"counted": 0, "next_history_id": 0}
-        self._cleanup_uncommitted(start)
+        self.store.discard_uncommitted(start)
 
         # the per-round shuffle sizing changes a session-level conf; the
         # caller gets its own value back however the crawl ends
@@ -1235,9 +1218,8 @@ class CrawlEngine:
     # ------------------------------------------------- O19/O20 maintenance ops
     def remove_urls_by_root_page(self, root_page_id: int) -> int:
         """DELETE FROM frontier WHERE root_page_id = ? (Krawler.kt:216-226).
-        Row-level delete = filtered rewrite of the queue snapshot, written
-        to a side dir and atomically swapped (never overwrites a directory
-        the input plan reads)."""
+        Row-level delete = filtered rewrite of the queue snapshot (the
+        store never overwrites a directory the input plan reads)."""
         return self._rewrite_frontier(
             ~(F.col("root_page_id") == F.lit(root_page_id))
             | F.col("root_page_id").isNull()
@@ -1256,8 +1238,8 @@ class CrawlEngine:
             return 0
         before = f.count()
         kept = f.filter(keep_predicate)
-        self.store.write_table_swap("frontier", rnd, kept)
-        after = self.store.read_snapshot("frontier", rnd).count()
+        after = kept.count()
+        self.store.write_table("frontier", rnd, kept)
         return int(before - after)
 
     def clear_history(self, before_round: int) -> int:

@@ -1,11 +1,12 @@
 """Iceberg-backed snapshot store — the production twin of
 ``plans.store.SnapshotStore``.
 
-The engine only touches the SnapshotStore method surface, so swapping
-the parquet-dir store for real Iceberg tables is config-level
-(VERDICT r1, missing #1). This class implements that swap for clusters
-where ``iceberg-spark-runtime`` is on the classpath and a catalog is
-configured, e.g.::
+Both backends subclass ``plans.store.StoreCore``, which defines the
+history, visited, events and frontier views once; this class supplies
+only the Iceberg I/O and commit protocol. The engine touches only the
+public store methods, so a crawl runs on Iceberg by passing an instance
+as ``CrawlEngine(store=...)``. It needs ``iceberg-spark-runtime`` on the
+classpath and a configured catalog, e.g.::
 
     spark.sql.catalog.krawl = org.apache.iceberg.spark.SparkCatalog
     spark.sql.catalog.krawl.type = hadoop        # or hive / rest
@@ -30,15 +31,16 @@ _commits/rN.json    table ``<ns>.commits`` (r, state_json) — the commit
 _history_floor      row in ``<ns>.commits`` with r = -1
 ==================  =====================================================
 
-Resumability story (north_rule): Iceberg gives snapshot isolation and
-time travel natively — a killed job resumes from the last committed
-round because every reader below filters on the committed-round set,
-and the round-filter ``overwrite`` makes round retries idempotent
-(not ``overwritePartitions``: with the delta's second partition column
+Resumability story (north_rule): a killed job resumes from the last
+committed round. The views read rounds ``r <= upto_round``, and the
+engine passes a committed round; on resume, ``discard_uncommitted``
+deletes the crashed round's delta rows, and the round-filter
+``overwrite`` makes round retries idempotent (not
+``overwritePartitions``: with the delta's second partition column
 ``kind``, a retry missing some kind would strand the crashed attempt's
-rows in that kind's partition). The bloom
-shard snapshots ride along as an ordinary partitioned table, i.e.
-"per-partition bloom shards carried by snapshot checkpoints".
+rows in that kind's partition). The bloom shard snapshots ride along as
+an ordinary partitioned table, i.e. "per-partition bloom shards carried
+by snapshot checkpoints".
 
 This environment has no Iceberg runtime (no network to fetch the
 iceberg-spark-runtime jar), so the class raises at construction unless
@@ -57,7 +59,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .store import EVENT_KINDS, FRONTIER_KINDS, HIST_KINDS, visited_headers
+from .store import StoreCore
 
 
 def iceberg_available(spark: SparkSession, catalog: str) -> bool:
@@ -73,7 +75,7 @@ def iceberg_available(spark: SparkSession, catalog: str) -> bool:
         return False
 
 
-class IcebergSnapshotStore:
+class IcebergSnapshotStore(StoreCore):
     """SnapshotStore API over Iceberg tables. Construct with a catalog
     name and namespace; raises RuntimeError when Iceberg is absent."""
 
@@ -141,9 +143,6 @@ class IcebergSnapshotStore:
             return f"{loc.removeprefix('file:')}/data/r={round_no}"
         except Exception:
             return f"/nonexistent/{name}/r={round_no}"
-
-    # Iceberg writes are snapshot-isolated; no side-dir swap needed.
-    write_table_swap = write_table
 
     def write_rows_local(self, name: str, round_no: int, rows: list, schema) -> None:
         self.write_table(name, round_no, self.spark.createDataFrame(rows, schema))
@@ -220,88 +219,26 @@ class IcebergSnapshotStore:
         return None if d is None else d.filter(F.col("r") == round_no)
 
     def history_floor(self) -> int:
+        """The highest floor set (floors only rise; each set appends a
+        row)."""
         row = (
-            self.spark.table(self._tbl("commits"))
-            .filter(F.col("r") == -1)
-            .orderBy(F.length("state_json").desc())
+            self.spark.table(self._tbl("commits")).filter(F.col("r") == -1)
+            .agg(F.max(F.get_json_object("state_json", "$.floor").cast("int")))
             .first()
         )
-        return int(json.loads(row["state_json"])["floor"]) if row else 0
+        return int(row[0]) if row and row[0] is not None else 0
 
     def set_history_floor(self, floor: int) -> None:
         self.spark.createDataFrame(
             [(-1, json.dumps({"floor": int(floor)}))], "r int, state_json string"
         ).writeTo(self._tbl("commits")).append()
 
-    def read_history(self, upto_round: int) -> Optional[DataFrame]:
-        d = self.read_delta_all()
-        if d is None:
-            return None
-        floor = self.history_floor()
-        return d.filter(
-            (F.col("r") <= upto_round) & (F.col("r") >= floor)
-            & F.col("kind").isin(*HIST_KINDS)
-        ).select(
-            "id", "url", F.xxhash64("url").alias("url_hash64"),
-            F.col("r").cast("int").alias("seen_round"),
-        )
-
-    def read_visited(self, upto_round: int) -> Optional[DataFrame]:
-        d = self.read_delta_all()
-        if d is None:
-            return None
-        from .. import schemas as _schemas
-
-        links = (
-            F.col("links") if "links" in d.columns
-            else F.lit(None).cast(_schemas.LINKS_T).alias("links")
-        )
-        return d.filter(
-            (F.col("r") <= upto_round) & (F.col("kind") == "visited")
-        ).select(
-            "url", "host", "depth", "root_page_id", "parent_url",
-            F.col("r").cast("int").alias("fetch_round"),
-            "host_seq", "action", "status", "text", "lang", "redirect_history",
-            links,
-            visited_headers(),
-        )
-
-    def read_events(self, upto_round: int) -> Optional[DataFrame]:
-        d = self.read_delta_all()
-        if d is None:
-            return None
-        return d.filter(
-            (F.col("r") <= upto_round) & F.col("kind").isin(*EVENT_KINDS)
-        ).select(
-            "url", "parent_url", F.col("r").cast("int").alias("round"),
-            "kind", "detail",
-        )
-
-    def read_frontier(self, round_no: int) -> Optional[DataFrame]:
-        if self._exists("frontier_snap"):
-            snap = self.spark.table(self._tbl("frontier_snap")).filter(
-                F.col("r") == round_no
-            )
-            if snap.limit(1).count() > 0:
-                from .. import schemas
-
-                return snap.select(*[f.name for f in schemas.FRONTIER.fields])
-        if round_no >= 1:
-            d = self.read_delta_round(round_no - 1)
-            if d is not None:
-                from .. import schemas
-
-                return d.filter(F.col("kind").isin(*FRONTIER_KINDS)).select(
-                    *[f.name for f in schemas.FRONTIER.fields]
-                )
-        return None
-
     def read_snapshot(self, name: str, round_no: int) -> Optional[DataFrame]:
         name = "frontier_snap" if name == "frontier" else name
         if not self._exists(name):
             return None
         df = self.spark.table(self._tbl(name)).filter(F.col("r") == round_no)
-        return df.drop("r")
+        return df.drop("r") if df.limit(1).count() > 0 else None
 
     def read_metrics(self, upto_round: int) -> Optional[DataFrame]:
         if not self._exists("metrics"):
@@ -311,6 +248,13 @@ class IcebergSnapshotStore:
         ).drop("r")
 
     # -- maintenance ----------------------------------------------------------
+    def discard_uncommitted(self, from_round: int) -> None:
+        """Delete the delta rows a crashed attempt left at or above
+        ``from_round`` (a row-level delete, so the catalog stays in
+        step with its data files)."""
+        if self._exists("delta"):
+            self.spark.sql(f"DELETE FROM {self._tbl('delta')} WHERE r >= {int(from_round)}")
+
     def prune_snapshots(self, keep_from_round: int) -> None:
         for name, extra in (("frontier_snap", ""), ("bloom", ""),
                             ("delta", " AND kind = 'host_state'")):

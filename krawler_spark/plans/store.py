@@ -31,11 +31,12 @@ Layout::
                               retired from the URL-seen view)
 
 A round is visible iff its marker exists; a crash mid-round leaves
-orphan data directories that are ignored and overwritten on retry —
-the same snapshot-isolation contract an Iceberg catalog provides. On a
-real cluster this class is swapped for Iceberg tables (``writeTo(...)
-.append()`` / ``overwritePartitions`` + snapshot tags); the engine only
-touches the methods below, so the swap is config-level.
+orphan data directories that ``discard_uncommitted`` drops on resume —
+the same snapshot-isolation contract an Iceberg catalog provides. The
+views are defined once, in ``StoreCore``; a backend supplies only its
+I/O and its commit protocol. ``plans.iceberg_store.IcebergSnapshotStore``
+is the Iceberg backend; the engine touches only the public methods, so
+the backend is chosen by the ``store=`` argument of ``CrawlEngine``.
 
 Scale note (north_rule): the single partitioned write replaces five
 separate table writes per round — one Spark job materializes the whole
@@ -55,6 +56,8 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import schemas
+
 # kinds that constitute the URL-seen history (rows consumed WITH a
 # history insert — Krawler.kt:369-380)
 HIST_KINDS = ("visited", "fetch_error", "filtered", "robots_denied", "budget_extra")
@@ -65,22 +68,96 @@ EVENT_KINDS = ("repeat_visit", "depth_cut", "robots_denied", "fetch_error",
 FRONTIER_KINDS = ("child", "deferred")
 
 
-def visited_headers():
-    """The visited view's ``headers``: KrawlDocument's lower-cased
-    response headers (KrawlDocument.kt:51-61), synthesized from the
-    stored content length — the offline-fetch pair a static server
-    would send. A live connector would store its real (lower-cased)
-    response map in the delta instead."""
-    return F.when(
-        F.col("clen").isNotNull(),
-        F.create_map(
-            F.lit("content-type"), F.lit("text/html; charset=utf-8"),
-            F.lit("content-length"), F.col("clen").cast("string"),
-        ),
-    ).alias("headers")
+class StoreCore:
+    """The four state views (history, visited, events, frontier),
+    defined once over a backend's read surface:
+
+    * ``read_delta_all()``: every round delta with ``r`` and ``kind``
+      columns, or None before the first write;
+    * ``read_delta_round(n)``: round n's delta, or None;
+    * ``history_floor()``: the clearHistory watermark;
+    * ``read_snapshot(name, n)``: round n of a snapshot table, or None
+      when that round has none;
+    * ``_table_dir(name, n)``: the filesystem directory of round n of a
+      table (the bloom probe reads its shards there with pyarrow).
+
+    A backend adds its writes, its commit protocol and its maintenance
+    operations."""
+
+    def read_history(self, upto_round: int) -> Optional[DataFrame]:
+        """URL-seen view (History/Dao.kt:57-58): rows of any consumed
+        kind, above the clearHistory floor."""
+        d = self.read_delta_all()
+        if d is None:
+            return None
+        floor = self.history_floor()
+        return d.filter(
+            (F.col("r") <= upto_round) & (F.col("r") >= floor)
+            & F.col("kind").isin(*HIST_KINDS)
+        ).select(
+            "id", "url", F.xxhash64("url").alias("url_hash64"),
+            F.col("r").cast("int").alias("seen_round"),
+        )
+
+    def read_visited(self, upto_round: int) -> Optional[DataFrame]:
+        d = self.read_delta_all()
+        if d is None:
+            return None
+        # delta schema v1 (pre-links) degrades to a NULL links column
+        links = (
+            F.col("links") if "links" in d.columns
+            else F.lit(None).cast(schemas.LINKS_T).alias("links")
+        )
+        # KrawlDocument's lower-cased response headers
+        # (KrawlDocument.kt:51-61), synthesized from the stored content
+        # length: the offline-fetch pair a static server would send. A
+        # live connector would store its real response map instead.
+        headers = F.when(
+            F.col("clen").isNotNull(),
+            F.create_map(
+                F.lit("content-type"), F.lit("text/html; charset=utf-8"),
+                F.lit("content-length"), F.col("clen").cast("string"),
+            ),
+        ).alias("headers")
+        return d.filter(
+            (F.col("r") <= upto_round) & (F.col("kind") == "visited")
+        ).select(
+            "url", "host", "depth", "root_page_id", "parent_url",
+            F.col("r").cast("int").alias("fetch_round"),
+            "host_seq", "action", "status", "text", "lang", "redirect_history",
+            links, headers,
+        )
+
+    def read_events(self, upto_round: int) -> Optional[DataFrame]:
+        d = self.read_delta_all()
+        if d is None:
+            return None
+        return d.filter(
+            (F.col("r") <= upto_round) & F.col("kind").isin(*EVENT_KINDS)
+        ).select(
+            "url", "parent_url", F.col("r").cast("int").alias("round"),
+            F.col("kind").cast("string").alias("kind"), "detail",
+        )
+
+    def read_frontier(self, round_no: int) -> Optional[DataFrame]:
+        """Frontier@N: an explicit snapshot if one exists (seeds,
+        maintenance rewrites), else the delta-derived view of round N-1
+        (child ∪ deferred) — the queue state is never written twice."""
+        cols = [f.name for f in schemas.FRONTIER.fields]
+        explicit = self.read_snapshot("frontier", round_no)
+        if explicit is not None:
+            return explicit.select(*cols)
+        d = self.read_delta_round(round_no - 1) if round_no >= 1 else None
+        if d is None:
+            return None
+        return d.filter(F.col("kind").isin(*FRONTIER_KINDS)).select(*cols)
+
+    def bloom_dir(self, round_no: int) -> str:
+        """Directory of round N's bloom shards, for the probe's reads."""
+        return self._table_dir("bloom", round_no)
 
 
-class SnapshotStore:
+class SnapshotStore(StoreCore):
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
@@ -126,16 +203,12 @@ class SnapshotStore:
         )
 
     def write_table(self, name: str, round_no: int, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(self._table_dir(name, round_no))
-
-    def write_table_swap(self, name: str, round_no: int, df: DataFrame) -> None:
-        """Write to a side dir then atomically swap into place — never
+        """Write to a side dir then swap it into place — never
         overwrite a directory the input plan may still be reading."""
         final_dir = self._table_dir(name, round_no)
         tmp_dir = final_dir + ".swap"
         df.write.mode("overwrite").parquet(tmp_dir)
         shutil.rmtree(final_dir, ignore_errors=True)
-        os.makedirs(os.path.dirname(final_dir), exist_ok=True)
         os.replace(tmp_dir, final_dir)
 
     def write_rows_local(self, name: str, round_no: int, rows: list, schema) -> None:
@@ -248,76 +321,6 @@ class SnapshotStore:
             json.dump({"floor": int(floor)}, f)
         os.replace(tmp, p)
 
-    def read_history(self, upto_round: int) -> Optional[DataFrame]:
-        """URL-seen view (History/Dao.kt:57-58): rows of any consumed
-        kind, above the clearHistory floor."""
-        d = self.read_delta_all()
-        if d is None:
-            return None
-        floor = self.history_floor()
-        return (
-            d.filter(
-                (F.col("r") <= upto_round)
-                & (F.col("r") >= floor)
-                & F.col("kind").isin(*HIST_KINDS)
-            )
-            .select(
-                F.col("id"),
-                F.col("url"),
-                F.xxhash64("url").alias("url_hash64"),
-                F.col("r").cast("int").alias("seen_round"),
-            )
-        )
-
-    def read_visited(self, upto_round: int) -> Optional[DataFrame]:
-        d = self.read_delta_all()
-        if d is None:
-            return None
-        from .. import schemas as _schemas
-
-        # delta schema v1 (pre-links) degrades to a NULL links column
-        links = (
-            F.col("links") if "links" in d.columns
-            else F.lit(None).cast(_schemas.LINKS_T).alias("links")
-        )
-        return d.filter(
-            (F.col("r") <= upto_round) & (F.col("kind") == "visited")
-        ).select(
-            "url", "host", "depth", "root_page_id", "parent_url",
-            F.col("r").cast("int").alias("fetch_round"),
-            "host_seq", "action", "status", "text", "lang", "redirect_history",
-            links,
-            visited_headers(),
-        )
-
-    def read_events(self, upto_round: int) -> Optional[DataFrame]:
-        d = self.read_delta_all()
-        if d is None:
-            return None
-        return d.filter(
-            (F.col("r") <= upto_round) & F.col("kind").isin(*EVENT_KINDS)
-        ).select(
-            "url", "parent_url", F.col("r").cast("int").alias("round"),
-            F.col("kind").cast("string").alias("kind"), "detail",
-        )
-
-    def read_frontier(self, round_no: int) -> Optional[DataFrame]:
-        """Frontier@N: an explicit snapshot if one exists (seeds,
-        maintenance rewrites), else the delta-derived view of round N-1
-        (child ∪ deferred) — the queue state is never written twice."""
-        explicit = self._table_dir("frontier", round_no)
-        if os.path.isdir(explicit):
-            return self._read_parquet_cached("frontier", explicit)
-        if round_no >= 1:
-            d = self.read_delta_round(round_no - 1)
-            if d is not None:
-                from .. import schemas
-
-                return d.filter(F.col("kind").isin(*FRONTIER_KINDS)).select(
-                    *[f.name for f in schemas.FRONTIER.fields]
-                )
-        return None
-
     # -- plain snapshot reads -------------------------------------------------
     def read_snapshot(self, name: str, round_no: int) -> Optional[DataFrame]:
         d = self._table_dir(name, round_no)
@@ -339,6 +342,14 @@ class SnapshotStore:
         return self._read_parquet_cached("metrics", *dirs)
 
     # -- maintenance ----------------------------------------------------------
+    def discard_uncommitted(self, from_round: int) -> None:
+        """Drop the delta dirs a crashed attempt left at or above
+        ``from_round``, so partition discovery never trips over
+        half-written files."""
+        for r in self.delta_rounds():
+            if r >= from_round:
+                shutil.rmtree(self._table_dir("delta", r), ignore_errors=True)
+
     def prune_snapshots(self, keep_from_round: int) -> None:
         """Drop old snapshot rounds (bloom/frontier) and old rounds'
         ``kind=host_state`` delta partitions; the rest of the unified

@@ -343,17 +343,76 @@ def test_emulated_history_floor_and_prune(spark, emu_store):
     assert not any(t.startswith(store.ns + ".") for t in emu.tables)
 
 
+def test_emulated_history_floor_is_the_highest_set(spark, emu_store):
+    """Floors only rise; floors of the same digit count must not tie
+    (a later clear_history would otherwise have no effect)."""
+    store, _emu = emu_store
+    for floor in range(1, 10):
+        store.set_history_floor(floor)
+        assert store.history_floor() == floor
+
+
+@pytest.mark.parametrize("backend", ["parquet", "iceberg"])
+def test_resume_discards_uncommitted_round(spark, tmp_path, request, backend):
+    """A round killed between its delta write and its commit leaves delta
+    rows behind; resuming drops them, so the delta holds exactly the
+    committed rounds."""
+    from krawler_spark.plans.store import SnapshotStore
+
+    if backend == "iceberg":
+        store, _emu = request.getfixturevalue("emu_store")
+    else:
+        store = SnapshotStore(spark, str(tmp_path / "wh"))
+    rows = build_pages_local(n_hosts=3, pages_per_host=6, hot_factor=2)
+
+    def engine(max_rounds):
+        cfg = CrawlConfig(max_depth=3, round_seconds=1.0, max_rounds=max_rounds,
+                          use_bloom=False)
+        return CrawlEngine(spark, spark.createDataFrame(rows, PAGES),
+                           config=cfg, store=store)
+
+    commit = store.commit_round
+
+    def killed_at_2(rnd, state=None):
+        if rnd == 2:
+            raise RuntimeError("killed before commit")
+        commit(rnd, state)
+
+    store.commit_round = killed_at_2
+    with pytest.raises(RuntimeError, match="killed before commit"):
+        engine(3).run(default_seeds(3))
+    store.commit_round = commit
+    assert store.last_committed() == 1
+    assert 2 in store.delta_rounds()
+
+    engine(2).run(resume=True)
+    assert sorted(store.delta_rounds()) == [0, 1]
+
+
+def _rows(df):
+    """Every row of a view as a sortable tuple (maps as sorted items)."""
+    def norm(v):
+        if isinstance(v, dict):
+            return tuple(sorted((k, norm(x)) for k, x in v.items()))
+        if isinstance(v, (list, tuple)):  # arrays and structs
+            return tuple(norm(x) for x in v)
+        return v
+    return sorted((tuple(norm(v) for v in r) for r in df.collect()), key=repr)
+
+
 def test_emulated_views_match_parquet_store(spark, emu_store, tmp_path):
-    """Both store backends expose the same view columns over one crawl,
-    each declared field with its declared type (``links`` is the one
-    extra column, on both)."""
+    """Both store backends return the same rows for every view over one
+    crawl, each declared field with its declared type (``links`` is the
+    one extra column, on both), and expose the same public methods."""
     from krawler_spark import schemas
+    from krawler_spark.plans.iceberg_store import IcebergSnapshotStore
     from krawler_spark.plans.store import SnapshotStore
 
     store, _emu = emu_store
     rows = build_pages_local(n_hosts=3, pages_per_host=6, hot_factor=2)
     cfg = CrawlConfig(max_depth=2, round_seconds=1.0, max_rounds=2,
-                      use_bloom=False)
+                      use_bloom=False, emit_links=True,
+                      deterministic_history_ids=True)
     views = {}
     for name, st in (("iceberg", store),
                      ("parquet", SnapshotStore(spark, str(tmp_path / "wh")))):
@@ -362,18 +421,27 @@ def test_emulated_views_match_parquet_store(spark, emu_store, tmp_path):
         eng.run(default_seeds(3))
         last = st.last_committed()
         views[name] = {
-            "visited": st.read_visited(last).schema,
-            "history": st.read_history(last).schema,
-            "events": st.read_events(last).schema,
+            "visited": st.read_visited(last),
+            "history": st.read_history(last),
+            "events": st.read_events(last),
+            "frontier": st.read_frontier(last + 1),
         }
     declared = {"visited": schemas.VISITED, "history": schemas.HISTORY,
-                "events": schemas.SIDE_EVENTS}
+                "events": schemas.SIDE_EVENTS, "frontier": schemas.FRONTIER}
     for view, want in declared.items():
         ice, pq = views["iceberg"][view], views["parquet"][view]
-        assert ice.fieldNames() == pq.fieldNames(), view
-        for sch in (ice, pq):
+        assert ice.schema.fieldNames() == pq.schema.fieldNames(), view
+        for sch in (ice.schema, pq.schema):
             types = {f.name: f.dataType for f in sch.fields}
             for f in want.fields:
                 assert f.name in types, (view, f.name)
                 assert types[f.name] == f.dataType, (view, f.name)
             assert set(types) - set(want.fieldNames()) <= {"links"}, view
+        assert _rows(ice) == _rows(pq), view
+    assert views["parquet"]["visited"].filter("links IS NOT NULL").count() > 0
+    assert views["parquet"]["frontier"].count() > 0
+
+    def public(cls):
+        return {n for n in dir(cls) if not n.startswith("_")}
+
+    assert public(IcebergSnapshotStore) == public(SnapshotStore)

@@ -162,7 +162,9 @@ def test_urlseen_stream_dedups_across_batches(spark, tmp_path):
 
 def test_submit_urls_raises_without_staging_support(spark, tmp_path):
     """A store lacking the staging interface fails LOUDLY instead of
-    silently no-opping (VERDICT r2 wrong #3)."""
+    silently no-opping (VERDICT r2 wrong #3). Every store subclasses
+    StoreCore and implements submissions, so the engine has no guard of
+    its own: the missing method itself raises."""
     from krawler_spark.config import CrawlConfig
     from krawler_spark.engine import CrawlEngine
     from krawler_spark.schemas import PAGES
@@ -176,5 +178,5 @@ def test_submit_urls_raises_without_staging_support(spark, tmp_path):
         pass
 
     eng.store = _NoStaging()
-    with pytest.raises(NotImplementedError, match="live[ ]submissions"):
+    with pytest.raises(AttributeError, match="stage_submissions"):
         eng.submit_urls(["http://a.com/"])
