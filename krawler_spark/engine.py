@@ -9,25 +9,27 @@ as one Catalyst-planned DataFrame DAG per round:
       ──in-batch dedup window over the unseen residue (rn=1 per url)
       ──shouldVisit/shouldCheck exprs──▶ robots broadcast-join + gate
       ──per-host politeness window──▶ admitted / deferred
-      ──redirect-chain resolve + left join pages corpus (the offline
-        GET, url-bucketed table)──▶ fetched / errors
-      ──mapInPandas harvest (canonicalize + filters)──▶ children
+      ──redirect-chain resolve + fetch join: url-bucketed corpus ⋉
+        admitted keys (the corpus streams), hits + payload left-joined
+        back──▶ fetched / errors
+      ──mapInPandas harvest of the fetched html (canonicalize + filters)
+        ──▶ children
     delta@r = visited ∪ noops ∪ events ∪ children ∪ deferred ∪ host_state
     frontier@r+1 = delta@r[kind ∈ (child, deferred)]   (a view)
 
 Scale decisions (graded against the north rule):
 
-* ONE materializing Spark job per round: every output row (visited,
+* ONE delta write per round: every output row (visited,
   history-consumed noops, events, harvested children, deferred queue
   rows, per-host fetch counts) is a branch of a single union written
   once, hive-partitioned by ``kind`` (``plans/store.py``). The logical
   tables — history, visited, events, frontier@r+1 — are
   partition-pruned views of that delta, so nothing is materialized
-  twice and no cross-job cache thrash exists. Shared subtrees dedupe
-  at the shuffle layer (ReusedExchange); only the two genuinely hot
-  frames (the bloom-probe output and the fetch-join output) are
-  explicitly persisted. Bloom shards are written only once the next
-  round's probe will read them.
+  twice and no cross-job cache thrash exists. The chain before the
+  write runs as four SQL executions: three ``localCheckpoint`` calls
+  (under AQE each runs its frame's shuffle and broadcast stages at
+  once) and the count that finishes the fetch-join frame. Bloom
+  shards are written only once the next round's probe will read them.
 * the frontier is hash-partitioned by ``host`` for the politeness
   window; hot hosts are bounded by the per-host budget itself (at most
   ``budget`` rows per host survive admission, so the fetch join is
@@ -235,30 +237,6 @@ class CrawlEngine:
             )
         except Exception:
             return 128 * 1024 * 1024
-
-    # ------------------------------------------------------- payload helpers
-    def _clen_frame(self) -> DataFrame:
-        """(url → content-length) decoded ONCE per crawl and persisted
-        as a narrow frame — every round's visited write needs clen for
-        the response-header synthesis, and re-deriving it would decode
-        the corpus's html column (the biggest bytes on the bus) once
-        per round. The cache is ~16 bytes/url; a cluster corpus table
-        (Iceberg) carries a materialized ``clen`` column instead — used
-        directly below whenever present, no decode at all. Dynamic
-        providers skip the cache (their corpus grows every round)."""
-        if "clen" in self.pages.columns:
-            return self.pages.select(
-                F.col("url").alias("_eff"), F.col("clen").alias("_clen")
-            )
-        if self.provider.dynamic:
-            return self.pages.select(
-                F.col("url").alias("_eff"), F.length("html").alias("_clen")
-            )
-        if getattr(self, "_clen_df", None) is None:
-            self._clen_df = self.pages.select(
-                F.col("url").alias("_eff"), F.length("html").alias("_clen")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-        return self._clen_df
 
     # -------------------------------------------------------- redirect chains
     def _redirects_resolved(self, max_hops: int = 5) -> DataFrame:
@@ -472,18 +450,21 @@ class CrawlEngine:
             unseen, repeats = live, None
 
         # --- 2. in-batch dedup over the unseen residue: first pop wins -------
-        # `ranked` is one of the four persisted chain frames: every branch
-        # of the round delta derives from one of them, and a single
-        # materializing pass (the fetched.count() below) computes the
-        # heavy chain exactly once — branch tails replayed during the
-        # write job are narrow ops over these caches.
-        # Chain frames are localCheckpoint'ed (lazily — they still
-        # materialize in the one chain pass below) rather than persisted:
-        # a checkpoint TRUNCATES the logical plan, so the ~8 delta
+        # `ranked` is one of the chain frames (with `ph`, `fetched` and
+        # the bloom probe's `probed`) every delta branch derives from:
+        # branch tails replayed in the delta write are narrow ops over
+        # them.
+        # Chain frames are localCheckpoint'ed rather than persisted: a
+        # checkpoint TRUNCATES the logical plan, so the ~8 delta
         # branches that fan out over these frames each analyze a
         # one-node scan instead of replaying the whole chain lineage —
         # the per-round Catalyst/codegen cost was a measured piece of
-        # the scaling Amdahl constant. Local checkpoints die with an
+        # the scaling Amdahl constant. `eager=False` is not lazy under
+        # AQE: each call plans its frame and at once runs the frame's
+        # shuffle and broadcast stages, in its own SQL execution (the
+        # event log shows the three checkpoint executions plus the
+        # fetched.count() below in every round); only a frame's final
+        # stage waits for its first consumer. Local checkpoints die with an
         # executor; a cluster deployment with task retries would use
         # reliable checkpoint dirs (or accept round replay — the commit
         # protocol makes rounds idempotent).
@@ -577,8 +558,8 @@ class CrawlEngine:
         # the engine's redirects frame — live crawls populate
         # redirect_history exactly like the corpus twin. The wire fetch
         # is per-host paced inside the provider (Requests.kt:150-186).
-        # The chain above is checkpointed, so this first action
-        # materializes it ONCE — the fetch join below reuses it.
+        # The chain above is checkpointed (its stages already ran at the
+        # localCheckpoint calls), so the fetch join below reuses it.
         # totalPages note: the global budget cut needs fetch outcomes
         # (only hits count), so with a budget set a round may wire-fetch
         # admitted URLs beyond the remaining budget — the same in-flight
@@ -625,24 +606,32 @@ class CrawlEngine:
             adm2 = admitted.withColumn("_eff", F.col("url")).withColumn(
                 "redirect_history", F.lit(None).cast(_REDIR_HIST_T)
             )
-        # Optional corpus `status` column (real response codes; absent →
-        # every hit synthesizes 200 like the offline-fetch default).
+        # Optional corpus columns: `status` (absent → every hit
+        # synthesizes 200, the offline-fetch default) and `clen` (absent
+        # → decoded from html, once per hit).
         has_status = "status" in self.pages.columns
-        # The corpus PAYLOAD stays entirely OUT of the round-chain frame:
-        # the fetch join reads only `url` (+ `status`) from the bucketed
-        # corpus — a hit is row *presence* (`_pg` marker), exactly the
-        # oracle's `pages.get(url) is not None`. text/lang/content-length
-        # are re-joined against the bucketed corpus at the visited write,
-        # and html at the harvest, each a column-pruned bucketed scan.
-        # Materializing payload bytes into the persisted chain pushed the
-        # round's biggest bytes through the block manager — a
-        # bandwidth-bound copy that does not scale with cores.
-        page_cols = [F.col("url").alias("_eff"), F.lit(True).alias("_pg")] + (
-            [F.col("status").alias("_pstatus")] if has_status else []
+        clen = F.col("clen") if "clen" in self.pages.columns else F.length("html")
+        # The payload is read ONCE, here: the corpus semi-joined to the
+        # admitted `_eff` keys, its hits (row *presence*, the `_pg`
+        # marker — the oracle's `pages.get(url) is not None`) left-joined
+        # back. A semi join builds only its right side, so the build side
+        # is bounded by the round's admissions and the corpus is never
+        # broadcast (nor shuffled, when it is url-bucketed). The fetched
+        # checkpoint holds only the hits' payload, bytes the harvest
+        # respread shuffles once anyway. Re-joining the payload at the
+        # visited write and the harvest instead made the corpus the
+        # build side whenever it fit under autoBroadcastJoinThreshold:
+        # on a 12,509-page bucketed corpus every round's delta write
+        # broadcast all of it three times.
+        hits = self.pages.join(
+            adm2.select(F.col("_eff").alias("url")), "url", "left_semi"
+        ).select(
+            F.col("url").alias("_eff"), F.lit(True).alias("_pg"),
+            (F.col("status") if has_status else F.lit(None).cast("int"))
+            .alias("_pstatus"),
+            "text", "lang", "html", clen.alias("_clen"),
         )
-        fetched = adm2.join(self.pages.select(*page_cols), "_eff", "left")
-        if not has_status:
-            fetched = fetched.withColumn("_pstatus", F.lit(None).cast("int"))
+        fetched = adm2.join(hits, "_eff", "left")
         if slow_redirects:
             # plain join — the redirect map grows with the corpus (never
             # an unconditional broadcast; AQE handles the small case)
@@ -713,12 +702,12 @@ class CrawlEngine:
         else:
             will_exhaust = False
 
-        # the fetch-join output feeds visited, fetch errors, and the
-        # harvest — persist it, then run ONE materializing pass: this
-        # computes the whole heavy chain (dedup window → seen-mark join
-        # → robots gate → politeness window → fetch join) exactly once
-        # into the four chain caches before the write job's branches
-        # fan out over them.
+        # the fetch-join output (with the admitted hits' payload) feeds
+        # visited, fetch errors, and the harvest — checkpoint it, then
+        # count it: the count runs the frame's final stage, so the chain
+        # (dedup window → seen-mark join → robots gate → politeness
+        # window → fetch join) is complete before the delta write's
+        # branches fan out over it.
         fetched = fetched.localCheckpoint(eager=False)
         fetched.count()
         tm.tick("materialize round chain")
@@ -728,7 +717,7 @@ class CrawlEngine:
         # (count in host_seq): read from round rnd-1, rewritten here.
         ok = fetched.filter(F.col("_hit"))
         w_host_seq = Window.partitionBy("host").orderBy(*_pop_order())
-        visited = ok.withColumn("_hs", F.row_number().over(w_host_seq))
+        visited = ok.drop("html").withColumn("_hs", F.row_number().over(w_host_seq))
         host_counts = ok.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
         prev_delta = self.store.read_delta_round(rnd - 1)
         if prev_delta is not None:
@@ -745,15 +734,6 @@ class CrawlEngine:
                 prev_host.withColumnRenamed("_prev", "_n")
             ).groupBy("host").agg(F.sum("_n").alias("_n"))
         host_b = _to_delta(host_counts, "host_state", host_seq=F.col("_n").cast("int"))
-        # Payload re-join (see the fetch join above): text/lang come
-        # from a column-pruned scan of the bucketed corpus keyed by the
-        # chain-final url (no html decode — clen is the once-per-crawl
-        # cached projection); only the narrow visited rows shuffle.
-        visited = visited.join(
-            self.pages.select(F.col("url").alias("_eff"), "text", "lang"),
-            "_eff",
-            "left",
-        ).join(self._clen_frame(), "_eff", "left")
         # Optional link surface (KrawlDocument.kt:77-89): one extra
         # Arrow pass over the body-bearing rows' HTML. KrawlDocument
         # always exposes LISTS — a body-less response (HEAD check,
@@ -764,9 +744,6 @@ class CrawlEngine:
         if cfg.emit_links:
             links_src = ok.filter(
                 F.col("_visit") & F.col("_rstatus").isNull()
-            ).select("url", "_eff").join(
-                self.pages.select(F.col("url").alias("_eff"), "html"),
-                "_eff", "inner",
             ).select("url", "html").repartition(
                 spark.sparkContext.defaultParallelism
             )
@@ -803,7 +780,6 @@ class CrawlEngine:
             action=F.when(F.col("_visit"), F.lit("visit")).otherwise(F.lit("check")),
             status=F.coalesce(F.col("_rstatus"), F.col("_pstatus"), F.lit(200)),
             counting=F.col("_counting"),
-            text=F.col("text"), lang=F.col("lang"),
             # KrawlDocument's lower-cased response headers
             # (KrawlDocument.kt:51-61). The offline fetch synthesizes the
             # canonical pair a static server would send; a live connector
@@ -889,13 +865,9 @@ class CrawlEngine:
         # Both actions harvest (Krawler.kt:409-415); a check's HEAD
         # response has no body (Requests.kt:137), so its harvest input is
         # the empty document — empty bodies yield no links, so only the
-        # visit rows join the corpus for their payload (semantics
-        # identical, zero empty rows shipped to python).
+        # visit rows go to python (semantics identical, zero empty rows
+        # shipped). Their html is the payload the fetch join read.
         harvest_src = ok.filter(F.col("_visit") & F.col("_rstatus").isNull()).select(
-            "url", "_eff", "depth", "root_page_id"
-        ).join(
-            self.pages.select(F.col("url").alias("_eff"), "html"), "_eff", "inner"
-        ).select(
             "url", "_eff", "html", "depth", "root_page_id"
         )
         # De-skew respread before the python extraction stage. The
@@ -915,8 +887,8 @@ class CrawlEngine:
         # parallelism byte-based splits even if AQE replans the join to
         # a file-split stream side, and every skip round's EXECUTED
         # extraction partition count is observed (spark_partition_id
-        # riding the harvest output into the round's one materializing
-        # job); a collapsed round flips the engine to the respread for
+        # riding the harvest output into the round's delta write); a
+        # collapsed round flips the engine to the respread for
         # the rest of the run.
         #
         # The respread makes `par` partitions: one task per core, one
@@ -997,7 +969,7 @@ class CrawlEngine:
         extract_obs = None
         if not respread:
             # skip-mode plan check: observe the EXECUTED extraction
-            # partition spread inside the round's one materializing job
+            # partition spread inside the round's delta write
             # (spark_partition_id immediately above the python node);
             # read back after the write, below.
             extract_obs = Observation(f"extract_parts_r{rnd}")
@@ -1043,7 +1015,7 @@ class CrawlEngine:
             _to_delta(deferred, "deferred")
         )
 
-        # --- THE round write: one job materializes the whole DAG ---------------
+        # --- THE round write: one write of every branch of the round DAG -------
         # Round counters ride the write job itself (Observation metrics
         # computed while rows stream to parquet) — the old separate
         # count-aggregation job over the written delta is gone.
@@ -1171,9 +1143,6 @@ class CrawlEngine:
                 self.spark.conf.unset(_SHUFFLE_PARTS)
             else:
                 self.spark.conf.set(_SHUFFLE_PARTS, caller_parts)
-            if getattr(self, "_clen_df", None) is not None:
-                self._clen_df.unpersist()
-                self._clen_df = None
 
     def _round_loop(self, start: int, state: dict) -> dict:
         cfg = self.config

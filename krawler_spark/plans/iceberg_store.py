@@ -29,6 +29,8 @@ _commits/rN.json    table ``<ns>.commits`` (r, state_json) — the commit
                     round leaves orphan partitions that the next attempt
                     replaces via ``overwrite(r == N)``
 _history_floor      row in ``<ns>.commits`` with r = -1
+(round dir exists)  row in ``<ns>.commits`` with r = -2 per
+                    ``write_table`` call: written-but-empty ≠ missing
 ==================  =====================================================
 
 Resumability story (north_rule): a killed job resumes from the last
@@ -125,8 +127,11 @@ class IcebergSnapshotStore(StoreCore):
         self._write_partitioned("delta", round_no, df, extra_part="kind")
 
     def write_table(self, name: str, round_no: int, df: DataFrame) -> None:
+        """Write round N, then record it: a round written with no rows
+        (an emptied frontier) reads back empty, not missing."""
         name = "frontier_snap" if name == "frontier" else name
         self._write_partitioned(name, round_no, df)
+        self._append_commits(-2, {"table": name, "round": int(round_no)})
 
     def _table_dir(self, name: str, round_no: int) -> str:
         """Filesystem path of one round's partition (used by the bloom
@@ -145,12 +150,16 @@ class IcebergSnapshotStore(StoreCore):
             return f"/nonexistent/{name}/r={round_no}"
 
     def write_rows_local(self, name: str, round_no: int, rows: list, schema) -> None:
-        self.write_table(name, round_no, self.spark.createDataFrame(rows, schema))
+        # read through read_metrics only: no write_table record per round
+        self._write_partitioned(name, round_no, self.spark.createDataFrame(rows, schema))
+
+    def _append_commits(self, r: int, state: dict) -> None:
+        self.spark.createDataFrame(
+            [(int(r), json.dumps(state))], "r int, state_json string"
+        ).writeTo(self._tbl("commits")).append()
 
     def commit_round(self, round_no: int, state: Optional[dict] = None) -> None:
-        self.spark.createDataFrame(
-            [(int(round_no), json.dumps(state or {}))], "r int, state_json string"
-        ).writeTo(self._tbl("commits")).append()
+        self._append_commits(round_no, state or {})
 
     def last_committed(self) -> Optional[int]:
         row = self.spark.sql(
@@ -229,16 +238,20 @@ class IcebergSnapshotStore(StoreCore):
         return int(row[0]) if row and row[0] is not None else 0
 
     def set_history_floor(self, floor: int) -> None:
-        self.spark.createDataFrame(
-            [(-1, json.dumps({"floor": int(floor)}))], "r int, state_json string"
-        ).writeTo(self._tbl("commits")).append()
+        self._append_commits(-1, {"floor": int(floor)})
 
     def read_snapshot(self, name: str, round_no: int) -> Optional[DataFrame]:
+        """Round N, or None if ``write_table`` never wrote it."""
         name = "frontier_snap" if name == "frontier" else name
         if not self._exists(name):
             return None
-        df = self.spark.table(self._tbl(name)).filter(F.col("r") == round_no)
-        return df.drop("r") if df.limit(1).count() > 0 else None
+        written = self.spark.table(self._tbl("commits")).filter(
+            (F.col("r") == -2) & (F.col("state_json") == json.dumps(
+                {"table": name, "round": int(round_no)}))
+        )
+        if written.limit(1).count() == 0:
+            return None
+        return self.spark.table(self._tbl(name)).filter(F.col("r") == round_no).drop("r")
 
     def read_metrics(self, upto_round: int) -> Optional[DataFrame]:
         if not self._exists("metrics"):
@@ -263,6 +276,12 @@ class IcebergSnapshotStore(StoreCore):
                     f"DELETE FROM {self._tbl(name)} "
                     f"WHERE r < {int(keep_from_round)}{extra}"
                 )
+        # the pruned rounds are missing again, not empty
+        self.spark.sql(
+            f"DELETE FROM {self._tbl('commits')} WHERE r = -2 AND "
+            "CAST(get_json_object(state_json, '$.round') AS INT) "
+            f"< {int(keep_from_round)}"
+        )
 
     def destroy(self) -> None:
         self.spark.sql(f"DROP NAMESPACE IF EXISTS {self.ns} CASCADE")

@@ -4,8 +4,10 @@ The reference abstracts "how a URL becomes a document" behind
 ``RequestProviderIf`` (``http/Requests.kt:46-61``: ``getUrl``,
 ``checkUrl``, ``fetchRobotsTxt``). The BSP engine's equivalent is a
 provider that maintains the round's *pages frame*: a DataFrame
-``(url, warc_ts, html, text, lang[, status])`` the round DAG joins
-against for the fetch mark, the visited payload, and the harvest body.
+``(url, warc_ts, html, text, lang[, status, clen])`` the round DAG
+reads once per round, in its fetch join: the frame is semi-joined to
+the round's admitted urls (so it is always the streamed side), and the
+hits carry the fetch mark, the visited payload and the harvest body.
 
 Two implementations:
 

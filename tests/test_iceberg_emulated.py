@@ -389,6 +389,45 @@ def test_resume_discards_uncommitted_round(spark, tmp_path, request, backend):
     assert sorted(store.delta_rounds()) == [0, 1]
 
 
+@pytest.mark.parametrize("backend", ["parquet", "iceberg"])
+def test_emptied_frontier_reads_empty(spark, tmp_path, request, backend):
+    """A frontier snapshot rewritten to no rows is an empty round, not a
+    missing one: the removed URLs must not come back from the
+    delta-derived view, for this store, a reopened one, or a resumed
+    crawl."""
+    from krawler_spark.plans.iceberg_store import IcebergSnapshotStore
+    from krawler_spark.plans.store import SnapshotStore
+
+    if backend == "iceberg":
+        store, _emu = request.getfixturevalue("emu_store")
+
+        def reopen():
+            return IcebergSnapshotStore(store.spark, CAT, namespace="t_emu")
+    else:
+        store = SnapshotStore(spark, str(tmp_path / "wh"))
+
+        def reopen():
+            return SnapshotStore(spark, store.path)
+    rows = build_pages_local(n_hosts=3, pages_per_host=6, hot_factor=2)
+
+    def engine(st, max_rounds):
+        cfg = CrawlConfig(max_depth=3, round_seconds=1.0, max_rounds=max_rounds,
+                          use_bloom=False)
+        return CrawlEngine(spark, spark.createDataFrame(rows, PAGES),
+                           config=cfg, store=st)
+
+    eng = engine(store, 1)
+    eng.run(default_seeds(3))
+    queued = store.read_frontier(1).count()
+    assert queued > 0
+    assert eng.remove_urls_by_age(99) == queued
+    assert store.read_frontier(1).count() == 0
+    assert reopen().read_frontier(1).count() == 0
+    # a resumed crawl finds nothing to fetch in round 1
+    engine(reopen(), 2).run(resume=True)
+    assert store.last_committed() == 0
+
+
 def _rows(df):
     """Every row of a view as a sortable tuple (maps as sorted items)."""
     def norm(v):
